@@ -685,6 +685,7 @@ def ks_drift(
     so never an unpartitioned window); the max is a 1-row reduce. Raw
     data is scanned once."""
     from harmonize_search_analyze_spark.operators.ordering import (
+        _lazy_bounds_frame,
         prefix_sums,
     )
 
@@ -701,7 +702,19 @@ def ks_drift(
     tot = per.agg(
         F.sum("ca").alias("na"), F.sum("cb").alias("nb")
     )
-    cum = prefix_sums(per, ["v"], {"ca": "__fa", "cb": "__fb"})
+    # Boundaries sampled from per's FULL output: a percentile over v
+    # alone lets column pruning drop the counts from per's aggregate,
+    # which makes a different exchange that re-scans the raw rows.
+    # Every per row has ca + cb >= 1, so the filter keeps every value
+    # and only pins the counts in the plan — the sample then reuses
+    # per's exchange, like tot does.
+    n = df.sparkSession.sparkContext.defaultParallelism
+    bounds = _lazy_bounds_frame(
+        per.where(F.col("ca") + F.col("cb") > 0), [("v", True)], n
+    )
+    cum = prefix_sums(
+        per, ["v"], {"ca": "__fa", "cb": "__fb"}, bounds_frame=bounds
+    )
     gap = F.abs(
         F.try_divide(F.col("__fa"), F.col("na"))
         - F.try_divide(F.col("__fb"), F.col("nb"))

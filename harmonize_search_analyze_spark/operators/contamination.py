@@ -30,10 +30,6 @@ from pyspark.sql import functions as F
 from harmonize_search_analyze_spark.operators.dedup import shingles_sql
 from harmonize_search_analyze_spark.operators.text import tokens_sql
 
-#: checkpoint the fuzzy-decontamination candidate list so its two
-#: consumers don't re-run the band join (round 11) — A/B-rig flag
-_FDC_CANDS_CKPT = True
-
 
 def contamination_flags(
     docs: DataFrame,
@@ -386,15 +382,6 @@ def fuzzy_decontaminate(
         .select(id_col, bench_id_col)
         .distinct()
     )
-    if _FDC_CANDS_CKPT:
-        # Round-11: the candidate list feeds BOTH the corpus-side
-        # semi-join and the final verify join; without a cut the whole
-        # corpus band build + band join executed twice under one action
-        # (profiled as the query's two heaviest stages, 8.9 s + 4.1 s
-        # runTime, each re-reading the band shuffle). The bounded pair
-        # list is checkpointed once; localCheckpoint (not persist) keeps
-        # AQE coalescing for both consumers.
-        cands = cands.localCheckpoint(eager=False)
     # shingle only the documents that actually have a candidate: the
     # semi-join bounds the second tokenization pass to the candidate
     # fraction instead of re-tokenizing the full 100 TB corpus

@@ -628,11 +628,6 @@ def simhash_near_dup_pairs_banded(
 # -- cluster resolution -------------------------------------------------------
 
 
-# propagation steps fused per eager checkpoint in connected_components
-# (A/B-measured knob, round 11)
-_CC_CADENCE = 2
-
-
 def connected_components(
     pairs: DataFrame,
     *,
@@ -696,7 +691,7 @@ def connected_components(
         .withColumn("cluster_id", F.col("id"))
         .localCheckpoint(eager=True)
     )
-    def _step(lbls: DataFrame, obs: "Observation | None") -> DataFrame:
+    for step in range(max_iters):
         # ONE exchange per propagation step (round-10 optimization pass):
         # the old shape was nbr = edges-join-labels -> groupBy(a) MIN
         # (first exchange) -> labels LEFT JOIN nbr (second exchange/
@@ -710,16 +705,16 @@ def connected_components(
         # algorithm-independent). The convergence scalar rides the
         # checkpoint job itself as an observe() metric — CollectMetrics
         # reports when the eager materialization runs, so no second
-        # action per super-step.
+        # action per step.
         prop = edges.join(
-            lbls.select(
+            labels.select(
                 F.col("id").alias("b"),
                 F.col("cluster_id").alias("lbl"),
             ),
             "b",
         ).select(F.col("a").alias("id"), "lbl", F.lit(False).alias("__old"))
         new = (
-            lbls.select(
+            labels.select(
                 "id",
                 F.col("cluster_id").alias("lbl"),
                 F.lit(True).alias("__old"),
@@ -731,9 +726,8 @@ def connected_components(
                 F.min(F.when(F.col("__old"), F.col("lbl"))).alias("__prev"),
             )
         )
-        if obs is None:
-            return new.select("id", "cluster_id")
-        return (
+        obs = Observation(f"__cc_changed_{id(pairs)}_{step}")
+        labels = (
             new.select(
                 "id",
                 "cluster_id",
@@ -745,40 +739,15 @@ def connected_components(
             .drop("__changed")
             .localCheckpoint(eager=True)
         )
-
-    # Checkpoint CADENCE 2 (round 11, the markov/pagerank trade): run TWO
-    # propagation steps per eager materialization and observe the second.
-    # A depth-2 plan costs less than a checkpoint round-trip, and the
-    # extra no-op step a cadence-2 probe may execute at the fixpoint is
-    # the identity (min(old, min(nbrs)) = old), so the returned labels —
-    # and the raise-iff-not-converged-within-max_iters contract — are
-    # unchanged: the super-step ends align on even steps plus a final
-    # single step when max_iters is odd, so every convergence point the
-    # old per-step loop could observe within max_iters is still observed
-    # at or before the same step count.
-    steps_done = 0
-    converged = False
-    while steps_done < max_iters:
-        span = min(_CC_CADENCE, max_iters - steps_done)
-        obs = Observation(f"__cc_changed_{id(pairs)}_{steps_done}")
-        lbls = labels
-        for s in range(span):
-            lbls = _step(lbls, obs if s == span - 1 else None)
-        steps_done += span
         # SUM over an empty labels frame observes NULL, not 0 — an
-        # empty pair graph must terminate on the first super-step, not
-        # spin to max_iters and raise (review find, round 10)
-        changed = obs.get["n"] or 0
-        labels = lbls
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} "
-            "iterations (component diameter exceeds max_iters?)"
-        )
-    return labels
+        # empty pair graph must terminate on the first step, not spin
+        # to max_iters and raise (review find, round 10)
+        if (obs.get["n"] or 0) == 0:
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iters} "
+        "iterations (component diameter exceeds max_iters?)"
+    )
 
 
 # -- line-level corpus dedup -------------------------------------------------

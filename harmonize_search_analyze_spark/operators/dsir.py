@@ -53,11 +53,6 @@ from harmonize_search_analyze_spark.operators.text import ngrams_sql
 #: HASH_BUCKETS discipline: h % GRAIN maps to u in (0,1))
 _GUMBEL_GRAIN = 1_000_000_000
 
-#: eager one-job materialization of the shared gram frame (round 11) —
-#: flag exists for the matched-slot A/B rig only
-_DSIR_EAGER = True
-
-
 def _grams_sql(text_expr: str, dialect: str) -> str:
     """Unigram + bigram array of the pinned tokenization (the paper's
     feature set), duplicates kept — c_b is a COUNT, not a set indicator."""
@@ -168,13 +163,12 @@ def dsir_weights(
 
     # ONE gram explosion shared by the fit and weight aggregations — the
     # tokenize+explode pass dominates (measured ~40% of wall at sf0.1
-    # when run twice); persisted and tethered to the returned frame.
-    # Round-11: materialized EAGERLY via localCheckpoint when _DSIR_EAGER
-    # — with a lazy persist, the ratio/total broadcast-subquery futures
-    # and the main weight stage race to fill the cache under ONE action,
-    # and the per-partition cache locks serialize the md5 gram hashing
-    # (profiled: the weight stage alone carried 16.7 s of the pipeline's
-    # 34 s CPU at sf0.1). One eager job hashes every gram exactly once;
+    # when run twice); tethered to the returned frame. Materialized
+    # EAGERLY via localCheckpoint — with a lazy persist, the ratio/total
+    # broadcast-subquery futures and the main weight stage race to fill
+    # the cache under ONE action, and the per-partition cache locks
+    # serialize the md5 gram hashing (profiled: the weight stage alone
+    # carried 16.7 s of the pipeline's 34 s CPU at sf0.1). One eager job hashes every gram exactly once;
     # every consumer then reads checkpointed blocks. localCheckpoint
     # rather than persist keeps AQE coalescing for the consumers (the
     # r10-documented cached-plan trap).
@@ -186,11 +180,7 @@ def dsir_weights(
         "__id",
         "__is_tgt",
         F.expr(_bucket_sql("__gram", "spark", m)).alias("bucket"),
-    )
-    if _DSIR_EAGER:
-        bucketed = bucketed.localCheckpoint(eager=True)
-    else:
-        bucketed = bucketed.persist()
+    ).localCheckpoint(eager=True)
     per_bucket = bucketed.groupBy("bucket").agg(
         F.sum("__is_tgt").alias("__t"),
         F.count(F.lit(1)).alias("__r"),

@@ -32,10 +32,6 @@ from pyspark.sql import DataFrame, functions as F
 from harmonize_search_analyze_spark.functions.caching import tether
 from harmonize_search_analyze_spark.functions.tokenize import split_tokens
 
-#: checkpoint graph_explore's token frame across its four consumers
-#: (round 11) — A/B-rig flag
-_GE_TOK_CKPT = True
-
 
 def graph_explore(
     df: DataFrame,
@@ -54,22 +50,22 @@ def graph_explore(
     doc_count the distinct documents containing both. Ordered
     (doc_count DESC, source ASC, target ASC), top ``conn_size``."""
     seed = seed_term.lower()
-    # NOTE (round-10 optimization pass): persisting tok across its four
-    # consumers was tried and MEASURED SLOWER at sf0.1 (1.9 s -> 2.6-3.0 s)
-    # — a cached subplan compiles without AQE coalescing, so each consumer
-    # pays fixed 32-partition scans that cost more than the re-tokenize.
-    # The module docstring's 100 TB guidance (persist at scale) stands.
-    tok = df.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("__doc"),
-        F.explode(F.array_distinct(split_tokens(text_col))).alias("term"),
+    # tok has FOUR consumers (seed_docs, v0, src, final). persist() was
+    # measured SLOWER in round 10 (1.9 s -> 2.6-3.0 s at sf0.1): a cached
+    # subplan compiles without AQE coalescing. A lazy localCheckpoint
+    # tokenizes once and keeps AQE coalescing for every consumer (paired
+    # A/B at sf0.1, local[4]: faster in 10/10 pairs, median 2.14 s vs
+    # 2.52 s).
+    tok = (
+        df.where(F.col(text_col).isNotNull())
+        .select(
+            F.col(id_col).alias("__doc"),
+            F.explode(F.array_distinct(split_tokens(text_col))).alias(
+                "term"
+            ),
+        )
+        .localCheckpoint(eager=False)
     )
-    if _GE_TOK_CKPT:
-        # Round-11: tok has FOUR consumers (seed_docs, v0, src, final) —
-        # each re-ran the tokenize+explode. Persist was the r10-rejected
-        # AQE-cache trap (1.9 -> 2.6-3.0 s); a lazy localCheckpoint
-        # materializes the ~6 MB token frame once and KEEPS AQE
-        # coalescing for every consumer.
-        tok = tok.localCheckpoint(eager=False)
     seed_docs = tok.where(F.col("term") == seed).select("__doc").distinct()
     v0 = (
         tok.join(seed_docs, "__doc")
@@ -300,10 +296,6 @@ def pagerank_sql(
     )
 
 
-# round-11 A/B knob: checkpoint triangle_count's oriented frame
-_TRI_ORIENTED_CKPT = True
-
-
 def triangle_count(
     edges: DataFrame,
     *,
@@ -364,20 +356,16 @@ def triangle_count(
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    # NOTE (round-10 optimization pass): persisting oriented across its
-    # three readers was tried and measured FLAT at sf0.1 — ReuseExchange
-    # already dedupes the identical degree-join subtrees, and a cached
-    # subplan loses AQE coalescing (see graph_explore note).
+    # oriented has three readers. persist() measured FLAT in round 10 (a
+    # cached subplan loses AQE coalescing; see graph_explore); a lazy
+    # localCheckpoint computes it once and keeps the parent partitioning
+    # (paired A/B at sf0.1, local[4]: faster in 10/10 pairs, median
+    # 1.68 s vs 2.12 s without it).
     oriented = with_deg.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
         F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("td"),
-    )
-    if _TRI_ORIENTED_CKPT:
-        # round-11 A/B knob: lazy localCheckpoint computes the oriented
-        # frame once for its three readers WITHOUT the SQL-cache AQE
-        # trap persist() has (LogicalRDD keeps the parent partitioning)
-        oriented = oriented.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     e1 = oriented.alias("e1")
     e2 = oriented.alias("e2")
     e3 = oriented.select(

@@ -33,10 +33,6 @@ from harmonize_search_analyze_spark.operators.sampling import (
     sample_hash_sql,
 )
 
-#: boundary sampling as an in-plan broadcast (round 11) instead of an
-#: eager per-query driver collect job — A/B-rig flag
-_LAZY_BOUNDS = True
-
 
 def global_order(
     df: DataFrame,
@@ -70,10 +66,8 @@ def global_order(
     spec = [(c, ascending) for c in sort_cols]
     order = _sort_columns(spec)
     src = df.persist()
-    bounds_frame = None
-    if _LAZY_BOUNDS:
-        n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
     tagged = _with_bucket(
         src, spec, num_partitions, "__pid", None, bounds_frame
     )
@@ -862,7 +856,7 @@ def prefix_sums(
     num_partitions: int | None = None,
     boundaries: list | None = None,
     bounds_frame: DataFrame | None = None,
-    lazy_bounds: bool | None = None,
+    lazy_bounds: bool = True,
 ) -> DataFrame:
     """Inclusive running sums over a distributed total order — the
     scalable replacement for ``SUM(x) OVER (ORDER BY k ROWS UNBOUNDED
@@ -886,6 +880,13 @@ def prefix_sums(
     offsets branches share one materialization (perf — correctness no
     longer depends on it; see the module note on why
     spark_partition_id() could not give that guarantee).
+
+    Boundaries come from ``boundaries=`` (literals) or ``bounds_frame=``
+    when given; otherwise they are sampled in-plan
+    (:func:`_lazy_bounds_frame`), or by one eager driver job when
+    ``lazy_bounds=False`` — the faster shape when the caller persists
+    the output for several consumers (``weighted_percentile``,
+    ``lorenz_gini``).
     """
     if not order_cols:
         raise ValueError("order_cols must be non-empty")
@@ -896,8 +897,7 @@ def prefix_sums(
     spec = _order_spec(order_cols)
     order = _sort_columns(spec)
     src = df.persist()
-    use_lazy = _LAZY_BOUNDS if lazy_bounds is None else lazy_bounds
-    if boundaries is None and bounds_frame is None and use_lazy:
+    if boundaries is None and bounds_frame is None and lazy_bounds:
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
         bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
     tagged = _with_bucket(
@@ -974,7 +974,7 @@ def ntile_scalable(
     order = _sort_columns(spec)
     src = df.persist()
     bounds_frame = None
-    if boundaries is None and _LAZY_BOUNDS:
+    if boundaries is None:
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
         bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
     tagged = _with_bucket(
@@ -1052,12 +1052,8 @@ def ntile_multi(
     specs = {out: _order_spec(spec) for out, spec in axes.items()}
     src = df.persist()
     bounds = None
-    bframe = None
-    if _LAZY_BOUNDS:
-        n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        bframe = _lazy_bounds_frame(
-            src, [spec[0] for spec in specs.values()], n
-        )
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    bframe = _lazy_bounds_frame(src, [spec[0] for spec in specs.values()], n)
     if bframe is None:
         bounds = sample_boundaries(
             src,
@@ -1148,7 +1144,7 @@ def prefix_max(
     order = _sort_columns(spec)
     src = df.persist()
     bounds_frame = None
-    if boundaries is None and _LAZY_BOUNDS:
+    if boundaries is None:
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
         bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
     tagged = _with_bucket(

@@ -25,10 +25,6 @@ from pyspark.sql import functions as F
 from harmonize_search_analyze_spark.functions.caching import tether
 from harmonize_search_analyze_spark.sources.tables import local_frame
 
-#: one-slice parallelize for driver-assembled centroid/codebook frames
-#: (round 11) — A/B-rig flag
-_SMALL_FRAME_ONE_SLICE = True
-
 
 def _dot_sql(a: str, b: str) -> str:
     return (
@@ -130,8 +126,6 @@ def _small_frame(spark, rows: list, ddl: str) -> DataFrame:
     path (``local_frame``'s documented VALUES param-explosion crossover),
     so the fix is the slice count, not the transport: same rows, same
     schema, one task instead of 32."""
-    if not _SMALL_FRAME_ONE_SLICE:  # A/B-rig fallback
-        return spark.createDataFrame(rows, ddl)
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), ddl)
 
 

@@ -19,10 +19,6 @@ from pyspark.sql import functions as F
 
 from harmonize_search_analyze_spark.functions.hashing import hash64_sql
 
-#: llr_collocations margins as axis-partitioned window sums (round 11)
-#: — A/B-rig flag
-_LLR_WINDOW_MARGINS = True
-
 # -- tokenization ------------------------------------------------------------
 
 _WORD_RE = r"[a-z0-9]+"
@@ -2434,16 +2430,11 @@ def llr_collocations(
         + h(k21, F.col("__n") - rr, cc)
         + h(k22, F.col("__n") - rr, F.col("__n") - cc)
     )
-    if _LLR_WINDOW_MARGINS:
-        margined = bi.select(
-            "w1", "w2", "c12",
-            F.sum("c12").over(Window.partitionBy("w1")).alias("r1"),
-            F.sum("c12").over(Window.partitionBy("w2")).alias("c2"),
-        )
-    else:  # A/B-rig fallback: the pre-round join form
-        margined = bi.join(
-            bi.groupBy("w1").agg(F.sum("c12").alias("r1")), "w1"
-        ).join(bi.groupBy("w2").agg(F.sum("c12").alias("c2")), "w2")
+    margined = bi.select(
+        "w1", "w2", "c12",
+        F.sum("c12").over(Window.partitionBy("w1")).alias("r1"),
+        F.sum("c12").over(Window.partitionBy("w2")).alias("c2"),
+    )
     out = (
         margined.where(F.col("c12") >= min_count)
         .crossJoin(nn)

@@ -27,27 +27,6 @@ def main() -> None:
         if a.startswith("--suffix="):
             suffix = a.split("=", 1)[1]
             names.remove(a)
-    r11flags = None
-    for a in list(names):
-        if a.startswith("--r11flags="):
-            r11flags = a.split("=", 1)[1] == "on"
-            names.remove(a)
-    if r11flags is not None:
-        # flip every round-11 A/B knob so the same rig captures the
-        # BEFORE (off) and AFTER (on) plan shapes
-        import harmonize_search_analyze_spark.operators.contamination as ct
-        import harmonize_search_analyze_spark.operators.dsir as ds
-        import harmonize_search_analyze_spark.operators.graph as gr
-        import harmonize_search_analyze_spark.operators.ordering as od
-        import harmonize_search_analyze_spark.operators.similarity as sm
-        import harmonize_search_analyze_spark.operators.text as tx
-
-        ds._DSIR_EAGER = r11flags
-        ct._FDC_CANDS_CKPT = r11flags
-        gr._GE_TOK_CKPT = r11flags
-        tx._LLR_WINDOW_MARGINS = r11flags
-        sm._SMALL_FRAME_ONE_SLICE = r11flags
-        od._LAZY_BOUNDS = r11flags
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out_dir = os.path.join(repo, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)

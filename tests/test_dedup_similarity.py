@@ -358,6 +358,27 @@ def test_connected_components_long_chain_converges(spark):
         connected_components(pairs, max_iters=2)
 
 
+@pytest.mark.parametrize("n_nodes", [5, 6, 7, 8])
+def test_connected_components_max_iters_boundary(spark, n_nodes):
+    """On an ascending n-node path the min label needs n - 1 propagation
+    steps and one more step to observe the fixpoint, so ``max_iters=n``
+    is the smallest budget that converges and ``n - 1`` raises — for odd
+    and even n alike."""
+    from harmonize_search_analyze_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n_nodes - 1)], "id1 long, id2 long"
+    )
+    out = connected_components(pairs, max_iters=n_nodes).collect()
+    assert {r["id"]: r["cluster_id"] for r in out} == {
+        i: 0 for i in range(n_nodes)
+    }
+    with pytest.raises(RuntimeError, match="converge"):
+        connected_components(pairs, max_iters=n_nodes - 1)
+
+
 def test_line_dedup_keeps_first_occurrence(spark):
     from harmonize_search_analyze_spark.operators.dedup import line_dedup
 

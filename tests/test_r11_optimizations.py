@@ -1,8 +1,9 @@
 """Focused contracts for the round-11 optimization internals.
 
 Each change here altered an operator's INTERNALS only — these tests pin
-the invariants the rewrites rely on, with the A/B fallback flag giving
-the reference behavior in-process (no golden files).
+the invariants the rewrites rely on, with the retained reference path
+(plain ``createDataFrame``, the eager boundary literals) giving the
+expected behavior in-process (no golden files).
 """
 
 from __future__ import annotations
@@ -128,50 +129,3 @@ def test_prefix_sums_lazy_matches_eager(spark):
     assert lazy == eager
     ordered = sorted(lazy)
     assert [lazy[v] for v in ordered] == sorted(lazy[v] for v in ordered)
-
-
-# -- llr window margins --------------------------------------------------------
-
-
-def test_llr_window_margins_match_join_form(spark):
-    from harmonize_search_analyze_spark.operators import text as tx
-
-    docs = spark.createDataFrame(
-        [("the cat sat on the mat the cat ran",),
-         ("the dog sat on the cat mat dog dog",),
-         ("cat mat cat mat cat mat on the mat",)] * 3,
-        "text STRING",
-    )
-    orig = tx._LLR_WINDOW_MARGINS
-    try:
-        tx._LLR_WINDOW_MARGINS = True
-        win = [tuple(r) for r in
-               tx.llr_collocations(docs, "text", min_count=2, top=10).collect()]
-        tx._LLR_WINDOW_MARGINS = False
-        join = [tuple(r) for r in
-                tx.llr_collocations(docs, "text", min_count=2, top=10).collect()]
-    finally:
-        tx._LLR_WINDOW_MARGINS = orig
-    assert win == join and len(win) > 0
-
-
-# -- dsir eager gram materialization -------------------------------------------
-
-
-def test_dsir_eager_flag_value_identical(spark):
-    from harmonize_search_analyze_spark.operators import dsir as ds
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma doc{i} beta", i % 2 == 0)
-         for i in range(12)],
-        "doc_id LONG, text STRING, is_en BOOLEAN",
-    )
-    orig = ds._DSIR_EAGER
-    try:
-        ds._DSIR_EAGER = True
-        on = sorted(map(tuple, ds.dsir_weights(docs, "is_en").collect()))
-        ds._DSIR_EAGER = False
-        off = sorted(map(tuple, ds.dsir_weights(docs, "is_en").collect()))
-    finally:
-        ds._DSIR_EAGER = orig
-    assert on == off and len(on) == 12
